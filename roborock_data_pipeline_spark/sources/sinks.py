@@ -345,13 +345,15 @@ def rename_table_column(
 
 def setup_warehouse(spark: SparkSession, warehouse_dir: str) -> None:
     """S8/S9: provision every table (idempotent, like the reference's
-    'already exists' tolerance, sheets_client.py:103-107). An empty
-    dataframe write pins the schema on disk; the schema manifest makes
-    the declaration evolvable (add_table_column) without code edits."""
+    'already exists' tolerance, sheets_client.py:103-107): the table
+    dir plus its schema manifest, which pins the declaration and makes
+    it evolvable (add_table_column) without code edits. No Spark job
+    runs — a table with no committed batch reads as a typed empty
+    frame (_read_paths), and its first append bootstraps the batch
+    manifest."""
     for name, schema in WAREHOUSE_TABLES.items():
         path = table_path(warehouse_dir, name)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            spark.createDataFrame([], schema).write.mode("ignore").parquet(path)
+        os.makedirs(path, exist_ok=True)
         if commit_provider.read_pointer(
             os.path.join(path, SCHEMA_MANIFEST)
         ) is None:
@@ -442,47 +444,41 @@ def _fuse_constraints(
 
 
 # ------------------------------------------------------------------ #
-# Batch-log layout v2 (VERDICT r10 #1): manifest-committed batch log. #
+# Batch-log layout: a manifest-committed batch log.                   #
 #                                                                      #
-# The legacy layout commits every mutation with a DIRECTORY rename —   #
-# atomic on POSIX/HDFS, NOT on object storage, where a dir rename is a #
-# non-atomic copy+delete. Layout v2 moves the commit point to ONE      #
-# single-file swap of `_batches.json` (a generation-numbered manifest  #
-# naming the live batch dirs) — the local-FS form of an object store's #
-# atomic/conditional PUT of a manifest object, i.e. the same commit    #
-# primitive the partitioned gold tables already use (_partitions.json) #
-# and the same one Delta/Iceberg commit through. Data dirs are written #
-# fully INVISIBLE (readers resolve the manifest, never the listing) so #
-# their placement needs no atomicity at all: a crash before the        #
-# manifest swap leaves an orphan dir no reader ever sees, GC'd by the  #
-# next vacuum. Reads are one manifest read + pruned scans — no         #
-# recursive listing.                                                   #
+# Every mutation of a batch-log table commits with ONE single-file     #
+# swap of `_batches.json` (a generation-numbered manifest naming the   #
+# live batch dirs) — the local-FS form of an object store's atomic /   #
+# conditional PUT of a manifest object, the same commit primitive the  #
+# partitioned gold tables use (_partitions.json) and the one           #
+# Delta/Iceberg commit through. Data dirs are written fully INVISIBLE  #
+# (readers resolve the manifest, never the listing), so their          #
+# placement needs no atomicity: a crash before the manifest swap       #
+# leaves an orphan dir no reader ever sees, GC'd by the next vacuum.   #
+# Reads are one manifest read + pruned scans — no recursive listing.   #
 #                                                                      #
-# Row-level rewrites (DELETE/UPDATE/MERGE) get an upgrade the rename   #
-# layout could not express: ALL affected batches swap in ONE manifest  #
-# commit (cross-batch atomic DML), by publishing each rewritten batch  #
-# under a VERSIONED physical name (`.rw<8hex>` segment) that preserves #
-# the batch's stamp prefix, vacuum-base suffix, and — via              #
-# batch_fold_id — its logical identity to the incremental refreshes'   #
-# fold state.                                                          #
+# Row-level rewrites (DELETE/UPDATE/MERGE) swap ALL affected batches   #
+# in ONE manifest commit (cross-batch atomic DML), by publishing each  #
+# rewritten batch under a VERSIONED physical name (`.rw<8hex>`         #
+# segment) that preserves the batch's stamp prefix, vacuum-base        #
+# suffix, and — via batch_fold_id — its logical identity to the        #
+# incremental refreshes' fold state.                                   #
 #                                                                      #
 # Concurrency: every manifest commit (appends included) serializes on  #
 # a millisecond-scale naming lock (_manifest_lock) held only for       #
 # stamp→rename→manifest-swap — the Spark write itself stays unlocked.  #
 # On a real deployment this seat is the conditional-PUT/transaction    #
 # service every table format needs on object storage.                  #
+#                                                                      #
+# The manifest is the ONLY layout. A table with no manifest is empty;  #
+# one with no manifest that still holds batch dirs, root part files    #
+# with rows or bare key=value data dirs was written by a retired       #
+# layout and every reader and mutator refuses it (_live_manifest)      #
+# rather than read it as empty. 0-row root part files (left by older   #
+# provisioning) are not data.                                          #
 # ------------------------------------------------------------------ #
 
 BATCHES_MANIFEST = "_batches.json"
-
-# r13 (VERDICT r12 #5): the legacy rename-commit WRITE paths are
-# gone. Every mutation commits through `_batches.json`; a mutation
-# that meets a legacy (pre-r11 rename-layout) table migrates it in
-# the same locked commit. Legacy READS remain (list_batches falls
-# back to the absorbed-filtered listing until a write or maintenance
-# pass migrates). Tests construct legacy tables by deleting the
-# manifest file from a committed table — byte-identical to a pre-r11
-# layout.
 
 # A manifest-lock holder silent past this is dead or frozen (the held
 # section is stamp + one rename + one json swap — milliseconds); a
@@ -494,7 +490,7 @@ _RW_SEG = re.compile(r"\.rw[0-9a-f]{8}")
 
 
 def batch_fold_id(batch_dirname: str) -> str:
-    """Logical batch identity across row-level rewrites: a v2
+    """Logical batch identity across row-level rewrites: a
     DELETE/UPDATE/MERGE republishes a batch under a versioned physical
     name (`batch-<stamp>-<uuid>.rw<8hex>[-vb]`), and anything that
     remembers batches ACROSS mutations — the fold state of the
@@ -502,8 +498,8 @@ def batch_fold_id(batch_dirname: str) -> str:
     the stamp+uuid identity, not the physical dirname, or a rewrite
     inside the fold grace band would be re-folded as a "new" batch and
     double-counted. Identity = the dirname with any `.rw` version
-    segment stripped; on the rename layout (no rewrites under new
-    names) this is the dirname itself."""
+    segment stripped; for a never-rewritten batch this is the dirname
+    itself."""
     return _RW_SEG.sub("", batch_dirname)
 
 
@@ -520,7 +516,7 @@ def _bump_rw(batch_dirname: str) -> str:
 
 
 def _batches_manifest(table_dir: str) -> dict | None:
-    """The committed batch manifest, or None for the rename layout.
+    """The committed batch manifest, or None if none was committed.
     A PRESENT-but-unreadable manifest raises loudly: falling back to
     the directory listing would promote uncommitted orphan dirs to
     live data — worse than failing the read."""
@@ -540,70 +536,85 @@ def _batches_manifest(table_dir: str) -> dict | None:
         ) from exc
 
 
-def _root_data_files(table_dir: str) -> list[str]:
-    """Root-level part files of a table dir — the pre-r11
-    plain-parquet layout (provisioning empties or an old
-    overwrite_rows snapshot). Visible to readers ONLY while no batch
-    manifest exists."""
-    if not os.path.isdir(table_dir):
-        return []
-    return sorted(
-        f
-        for f in os.listdir(table_dir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
+def _is_data_file(filename: str) -> bool:
+    return filename.endswith(".parquet") and not filename.startswith((".", "_"))
 
 
-def _root_rows(table_dir: str) -> int:
-    """Footer row count over the table's root-level part files
-    (pyarrow metadata only — no data pages read). ADVICE r13 (high):
-    the instant the FIRST batch manifest commits, read_table stops
-    reading root files, so every first-manifest path must prove they
-    are row-free (provisioning empties) before committing — otherwise
-    a pre-r11 plain-parquet table that receives an append has its
-    root rows silently vanish from all subsequent reads. An
-    unreadable footer is treated as data-bearing and raises: guessing
-    "empty" here is exactly the silent loss this guard exists to
-    stop."""
+def _holds_rows(path: str) -> bool:
+    """Whether a parquet file's footer counts any row (metadata only,
+    no data page read). Earlier setup_warehouse versions provisioned
+    every table with an empty-DataFrame write, which leaves 0-row root
+    part files: those are not data. An unreadable footer counts as
+    data — guessing "empty" would read a retired table as empty."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for f in _root_data_files(table_dir):
-        path = os.path.join(table_dir, f)
-        try:
-            total += pq.ParquetFile(path).metadata.num_rows
-        except Exception as exc:
-            raise ValueError(
-                f"unreadable root parquet file {path!r} while deciding "
-                "the first batch-manifest commit: committing would "
-                "silently exclude it from every read — inspect or "
-                f"remove the file first ({exc})"
-            ) from exc
-    return total
+    try:
+        return pq.ParquetFile(path).metadata.num_rows > 0
+    except Exception:
+        return True
 
 
-def _refuse_root_rows(table_dir: str, name: str, verb: str) -> None:
-    """The first-manifest guard (ADVICE r13 high). Called INSIDE the
-    manifest lock by every path about to commit generation 0 on a
-    manifest-less table."""
-    n = _root_rows(table_dir)
-    if n > 0:
-        raise ValueError(
-            f"table {name!r} holds {n} row(s) in root-level part "
-            "files (plain-parquet legacy layout): committing a batch "
-            f"manifest during {verb} would silently drop them from "
-            "every subsequent read — migrate first with "
-            "migrate_root_file_table(spark, warehouse_dir, "
-            f"{name!r}), or rebuild the table via overwrite_rows "
-            "(both fold the root rows into a manifest-named batch)"
+def _holds_bare_partition_data(path: str) -> bool:
+    """Parquet files directly inside a ``key=value`` dir (at any
+    ``key=value`` depth) — the pre-manifest partition layout.
+    Version leaves (``v-<hex>``) are not descended."""
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if "=" in d]
+        if any(_is_data_file(f) for f in files):
+            return True
+    return False
+
+
+def _live_manifest(table_dir: str, name: str) -> dict | None:
+    """THE live-set decision every reader and mutator goes through:
+    the committed batch manifest (its ``live`` list is exactly the
+    read set), or None for an EMPTY table — no manifest and no data.
+    A manifest-less table that still holds ``batch-*`` dirs, root
+    part files with rows, or parquet files under bare ``key=value``
+    dirs with no ``_partitions.json`` was written by a retired
+    pre-manifest layout: refused with one ValueError, never read as
+    empty."""
+    m = _batches_manifest(table_dir)
+    if m is not None or not os.path.isdir(table_dir):
+        return m
+    entries = os.listdir(table_dir)
+    retired = any(
+        e.startswith("batch-")
+        or (_is_data_file(e) and _holds_rows(os.path.join(table_dir, e)))
+        for e in entries
+    )
+    if not retired and _partitions_manifest(table_dir) is None:
+        retired = any(
+            _holds_bare_partition_data(os.path.join(table_dir, e))
+            for e in entries
+            if "=" in e
         )
+    if retired:
+        raise _retired_layout(
+            name,
+            f"has no {BATCHES_MANIFEST} but holds data (batch-* dirs, "
+            "root-level part files with rows or bare key=value "
+            "partition dirs)",
+        )
+    return None
+
+
+def _retired_layout(name: str, what: str) -> ValueError:
+    """The one refusal every reader and mutator raises for a table
+    written by a layout this engine no longer reads or writes."""
+    return ValueError(
+        f"table {name!r} {what}: it was written by a retired "
+        "pre-manifest layout this engine no longer reads or writes — "
+        "refusing rather than reading it as empty; re-ingest its rows "
+        "into a fresh table"
+    )
 
 
 @contextmanager
 def _manifest_lock(table_dir: str, name: str):
     """Serializes [stamp → naming rename → manifest swap] across every
-    v2 mutator of one table — appends included (v2 appends are no
-    longer commutative: each commit rewrites the shared manifest).
+    mutator of one table — appends included (appends are not
+    commutative: each commit rewrites the shared manifest).
     Unlike writer_lock this WAITS (the section it guards is
     milliseconds, so contention resolves in kind) instead of raising,
     and steals a holder silent past MANIFEST_LOCK_TTL_S through the
@@ -629,7 +640,7 @@ def _commit_batches(
     generation: int,
     still_mine=None,
 ) -> None:
-    """THE v2 commit point: stage the next manifest generation to a
+    """THE commit point: stage the next manifest generation to a
     temp file (fsync'd) and publish it with ONE single-file
     ``os.replace`` — on an object store this line is one atomic
     manifest PUT. Guarded by the writer-lease fence (a TTL-fenced
@@ -652,104 +663,17 @@ def _commit_batches(
     )
 
 
-def migrate_batch_manifest(warehouse_dir: str, name: str) -> int:
-    """In-place upgrade of a legacy rename-committed table to the
-    manifest layout; idempotent (returns the current generation if
-    already migrated). Runs under the writer lease so no vacuum/DML
-    interleaves, and takes the manifest lock for the [final legacy
-    listing → first commit] so an append racing the migration is
-    linearized: it either publishes before the listing (and is named
-    by generation 0) or blocks on the lock and re-reads the manifest
-    (and commits generation 1). The legacy listing is the
-    absorbed-filtered one, so crashed-vacuum leftovers do not get
-    promoted to live."""
-    table_dir = table_path(warehouse_dir, name)
-    os.makedirs(table_dir, exist_ok=True)
-    with writer_lock(warehouse_dir, name):
-        m = _batches_manifest(table_dir)
-        if m is not None:
-            return m["generation"]
-        with _manifest_lock(table_dir, name) as still_mine:
-            m = _batches_manifest(table_dir)
-            if m is not None:
-                return m["generation"]
-            # ADVICE r13 (high): same first-manifest guard as
-            # append_rows — a mixed legacy table (batch dirs AND
-            # data-bearing root files) must fold the root rows in via
-            # migrate_root_file_table, not drop them here
-            _refuse_root_rows(table_dir, name, "migrate_batch_manifest")
-            live = list_batches(warehouse_dir, name)
-            _commit_batches(table_dir, name, live, 0, still_mine)
-        return 0
-
-
-def migrate_root_file_table(
-    spark: SparkSession, warehouse_dir: str, name: str
-) -> int:
-    """Migrate a plain-parquet table — rows in root-level part files
-    (the pre-r11 provisioning/snapshot layout), possibly mixed with
-    legacy batch dirs — to the manifest layout WITHOUT losing the
-    root rows (ADVICE r13 high: the r13 layout sunset made every
-    first-manifest commit exclude root files, and the bootstrap /
-    migration paths never verified they were row-free; those paths
-    now refuse loudly, and this is the remedy the error names).
-
-    The whole legacy read set (root files + absorbed-filtered batch
-    dirs) is rewritten as ONE snapshot batch named by the gen-0
-    manifest, so the replaced files/dirs become invisible at the
-    commit instant — no window where both or neither count — and are
-    GC'd after. Idempotent: returns the current generation if a
-    manifest already exists. Linearization: every other first-commit
-    path refuses while root rows exist, so no new batch dir can
-    appear between this function's read and its commit; the in-lock
-    re-listing below keeps any that somehow did."""
-    table_dir = table_path(warehouse_dir, name)
-    with writer_lock(warehouse_dir, name):
-        m = _batches_manifest(table_dir)
-        if m is not None:
-            return m["generation"]
-        read_dirs = set(list_batches(warehouse_dir, name))
-        root_files = _root_data_files(table_dir)
-        df = read_table(spark, warehouse_dir, name)
-        staging_root = os.path.join(warehouse_dir, ".staging")
-        os.makedirs(staging_root, exist_ok=True)
-        staged = os.path.join(staging_root, f"{name}-{uuid.uuid4().hex}")
-        try:
-            df.write.mode("overwrite").parquet(staged)
-            with _manifest_lock(table_dir, name) as still_mine:
-                m = _batches_manifest(table_dir)
-                if m is not None:
-                    # lost the migration race to an overwrite_rows —
-                    # its commit already covered the legacy read set
-                    return m["generation"]
-                late = [
-                    d
-                    for d in list_batches(warehouse_dir, name)
-                    if d not in read_dirs
-                ]
-                batch_id = _fresh_batch_id()
-                os.replace(
-                    staged, os.path.join(table_dir, f"batch-{batch_id}")
-                )
-                _commit_batches(
-                    table_dir,
-                    name,
-                    [f"batch-{batch_id}"] + late,
-                    0,
-                    still_mine,
-                )
-        finally:
-            if os.path.exists(staged):
-                shutil.rmtree(staged, ignore_errors=True)
-        # post-commit GC: invisible since the manifest landed
-        for b in read_dirs:
-            shutil.rmtree(os.path.join(table_dir, b), ignore_errors=True)
-        for f in root_files:
-            try:
-                os.unlink(os.path.join(table_dir, f))
-            except OSError:
-                pass
-        return 0
+def _bootstrap_manifest(table_dir: str, name: str, still_mine) -> dict:
+    """The live manifest, committing an empty generation 0 first on a
+    fresh table. Called under _manifest_lock BEFORE a naming rename,
+    so a crash between that rename and its commit leaves an invisible
+    orphan under a manifest — never a manifest-less batch dir, which
+    _live_manifest would refuse as a retired layout."""
+    m = _live_manifest(table_dir, name)
+    if m is None:
+        _commit_batches(table_dir, name, [], 0, still_mine)
+        m = {"generation": 0, "live": []}
+    return m
 
 
 def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
@@ -763,11 +687,10 @@ def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
     lost — reintroducing the reference's T5 silent-loss bug
     (reference pipeline.py:562-568) at the job level.
 
-    Fix: write the whole batch to a staging dir, then publish it with
-    ONE ``os.replace`` (atomic directory rename on POSIX). Readers see
-    either none of the batch or all of it. On a real cluster the same
-    contract comes from a transactional table format (Delta/Iceberg
-    commit log); the staged-rename is the HDFS-/local-FS-native form.
+    Fix: write the whole batch to a staging dir, name it into the
+    table (still invisible), then publish it with ONE ``_batches.json``
+    commit. Readers see either none of the batch or all of it — the
+    same contract a transactional table format's commit log gives.
     """
     table_dir = table_path(warehouse_dir, name)
     if commit_provider.read_pointer(
@@ -851,43 +774,14 @@ def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
         # no syscall between, vs the multi-syscall stamp→rename path
         # this narrows.
         # EVERY append takes the (millisecond) naming lock: it
-        # serializes manifest commits, and the layout decision
-        # (manifest vs legacy-to-migrate) happens INSIDE it so an
-        # append can never race a concurrent migration's listing.
-        # The naming rename below is NOT the commit — the batch stays
-        # invisible (readers resolve the manifest) until
-        # _commit_batches swaps _batches.json; a crash in between
-        # leaves an orphan dir no reader sees, GC'd by the next
-        # vacuum. The lock spans stamp→rename→commit so stamps stay
-        # monotone with commit order (the as-of/fold invariant).
+        # serializes manifest commits. The naming rename below is NOT
+        # the commit — the batch stays invisible (readers resolve the
+        # manifest) until _commit_batches swaps _batches.json; a crash
+        # in between leaves an orphan dir no reader sees, GC'd by the
+        # next vacuum. The lock spans stamp→rename→commit so stamps
+        # stay monotone with commit order (the as-of/fold invariant).
         with _manifest_lock(table_dir, name) as still_mine:
-            m = _batches_manifest(table_dir)
-            if m is None:
-                # ADVICE r13 (high): the first manifest makes root
-                # part files stop being data — prove they are row-free
-                # (provisioning empties) before committing, else a
-                # pre-r11 plain-parquet table loses its rows here
-                _refuse_root_rows(table_dir, name, "append_rows")
-                if any(
-                    d.startswith("batch-") for d in os.listdir(table_dir)
-                ):
-                    # r13 sunset: the legacy rename-commit write
-                    # branch is gone — a legacy table migrates in
-                    # this same locked commit (the absorbed-filtered
-                    # listing is its live set; gen 0 lands migration
-                    # + append together)
-                    m = {
-                        "generation": -1,
-                        "live": list_batches(warehouse_dir, name),
-                    }
-                else:
-                    # fresh table: bootstrap an empty gen-0 manifest
-                    # BEFORE the naming rename, so a crash between
-                    # rename and commit leaves a detectable orphan
-                    # instead of degrading the table to the legacy
-                    # layout (pre-r13 first-append window)
-                    _commit_batches(table_dir, name, [], 0, still_mine)
-                    m = {"generation": 0, "live": []}
+            m = _bootstrap_manifest(table_dir, name, still_mine)
             batch_id = _fresh_batch_id()
             os.replace(
                 staged, os.path.join(table_dir, f"batch-{batch_id}")
@@ -973,64 +867,40 @@ def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
     """S5: full-table read with the CURRENT schema (manifest-resolved
     — evolved columns read as null on pre-evolution batches, widened
     types promoted at scan, renamed columns coalesced from their
-    retired physical names). The read set is EXPLICIT: root-level
-    part files (provisioning / overwrite_rows snapshots) plus the
-    LIVE ``batch-*`` dirs from list_batches — absorbed leftovers of a
-    crashed vacuum are named in the base's manifest and excluded, so
-    a crash between base publish and cleanup never double-counts
-    (VERDICT r7 #2). Orphaned ``.staging`` dirs are outside the table
-    path and never read.
-
-    r13: on a manifest-governed table the manifest is the ENTIRE read
-    set — root-level part files are ignored (they are provisioning
-    empties or a replaced plain-parquet snapshot awaiting GC). That
-    exclusion is what lets overwrite_rows migrate a root-file table
-    with ONE manifest commit: the instant `_batches.json` lands, the
-    old root files stop being data, so there is no window where both
-    count."""
+    retired physical names). The read set is EXACTLY the live batch
+    dirs the committed ``_batches.json`` names (list_batches):
+    orphans of a crashed append/vacuum/DML and anything else in the
+    table dir are never read, and orphaned ``.staging`` dirs are
+    outside the table path. A table with no committed batch reads as
+    a typed empty frame; one left by a retired layout raises."""
     table_dir = table_path(warehouse_dir, name)
-    paths = []
-    if _batches_manifest(table_dir) is None:
-        paths += [
-            os.path.join(table_dir, f)
-            for f in (
-                os.listdir(table_dir) if os.path.isdir(table_dir) else []
-            )
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-    paths += [
-        os.path.join(table_dir, b) for b in list_batches(warehouse_dir, name)
-    ]
-    return _read_paths(spark, warehouse_dir, name, paths)
+    return _read_paths(
+        spark, warehouse_dir, name,
+        [os.path.join(table_dir, b) for b in list_batches(warehouse_dir, name)],
+    )
 
 
 def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
     """Full-replace publish for rebuilt gold tables (idempotent
     re-runs).
 
-    Layout v2 (r11; r13 sunsets the legacy write branch): the
-    snapshot is ONE invisible batch dir committed by the same
-    single-file `_batches.json` swap every other mutation uses —
-    old-until-commit, no aside window at all, object-store-safe. A
-    legacy table (rename-layout batch dirs, or a plain root-part-file
-    parquet dir) migrates in this same commit: the manifest names
-    ONLY the new snapshot batch, and the instant it lands the old
-    batch dirs / root files stop being data (read_table ignores both
-    once a manifest exists), so there is no doubled or empty window;
-    they are GC'd post-commit (orphaned-invisible on a crash; the
-    vacuum heal reclaims them). The schema manifest (declared schema
-    + CHECK constraints) stays in the table dir untouched. A v2
-    snapshot table is additionally stamped ``layout: snapshot``
-    BEFORE the data commit
-    (ADVICE r12: stamping after left a crash window in which a
-    committed snapshot manifest carried no stamp, so row DML did not
-    refuse it and a later edit was silently clobbered by the next
-    rebuild; the early stamp is idempotent and merely conservative if
-    the commit then fails) so row DML refuses it explicitly —
-    snapshot tables are rebuilt wholesale. The v2 path runs under the
-    writer lease (ADVICE r12): unleased, a snapshot racing a vacuum's
-    listing→commit window had its replaced batches resurrected by the
-    vacuum's base."""
+    The snapshot is ONE invisible batch dir committed by the same
+    single-file ``_batches.json`` swap every other mutation uses: the
+    new manifest names ONLY the snapshot batch, so readers see the old
+    snapshot until the commit and the new one after — no aside window,
+    object-store-safe. The replaced batch dirs are GC'd post-commit
+    (orphaned-invisible on a crash; the vacuum heal reclaims them).
+    The schema manifest (declared schema + CHECK constraints) stays in
+    the table dir untouched, except that the table is stamped
+    ``layout: snapshot`` BEFORE the data commit (ADVICE r12: stamping
+    after left a crash window in which a committed snapshot carried no
+    stamp, so row DML did not refuse it and a later edit was silently
+    clobbered by the next rebuild; the early stamp is idempotent and
+    merely conservative if the commit then fails) so row DML refuses
+    it explicitly — snapshot tables are rebuilt wholesale. Runs under
+    the writer lease (ADVICE r12): unleased, a snapshot racing a
+    vacuum's listing→commit window had its replaced batches
+    resurrected by the vacuum's base."""
     df = _fuse_constraints(df, warehouse_dir, name, verb="overwrite")
     table_dir = table_path(warehouse_dir, name)
     staging_root = os.path.join(warehouse_dir, ".staging")
@@ -1047,6 +917,8 @@ def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
     # dirs. overwrite_rows is a full-table mutation like every
     # other leased mutator — it takes the same lease.
     with writer_lock(warehouse_dir, name):
+        # refuse a retired layout before the stamp below touches it
+        _live_manifest(table_dir, name)
         try:
             df.write.mode("overwrite").parquet(staged)
             os.makedirs(table_dir, exist_ok=True)
@@ -1070,24 +942,7 @@ def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
                     )
                 _publish_manifest(warehouse_dir, name, m)
             with _manifest_lock(table_dir, name) as still_mine:
-                cur = _batches_manifest(table_dir)
-                # r13 sunset: a LEGACY table (rename-layout batch
-                # dirs / plain root part files) migrates in this very
-                # commit — the gen-0 manifest names only the new
-                # snapshot, which IS the migration (everything it
-                # replaces becomes invisible at the same instant).
-                # The replaced-dir listing happens BEFORE the naming
-                # rename so the new snapshot can never list itself.
-                prev_dirs = (
-                    cur["live"]
-                    if cur is not None
-                    else [
-                        d
-                        for d in os.listdir(table_dir)
-                        if d.startswith("batch-")
-                    ]
-                )
-                gen = cur["generation"] if cur is not None else -1
+                cur = _bootstrap_manifest(table_dir, name, still_mine)
                 batch_id = _fresh_batch_id()
                 os.replace(
                     staged, os.path.join(table_dir, f"batch-{batch_id}")
@@ -1096,21 +951,13 @@ def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
                     table_dir,
                     name,
                     [f"batch-{batch_id}"],
-                    gen + 1,
+                    cur["generation"] + 1,
                     still_mine,
                 )
-            for b in prev_dirs:  # post-commit GC of the old snapshot
+            for b in cur["live"]:  # post-commit GC of the old snapshot
                 shutil.rmtree(
                     os.path.join(table_dir, b), ignore_errors=True
                 )
-            for f in os.listdir(table_dir):
-                # replaced root part files (plain-parquet legacy) and
-                # provisioning empties — invisible since the commit
-                if f.endswith(".parquet") and not f.startswith((".", "_")):
-                    try:
-                        os.unlink(os.path.join(table_dir, f))
-                    except OSError:
-                        pass
         finally:
             if os.path.exists(staged):
                 shutil.rmtree(staged, ignore_errors=True)
@@ -1128,51 +975,25 @@ def _rewrite_matching_batches(
     the live batch dirs holding matching rows in ONE scan
     (``find_matches(df) -> DataFrame`` of the matching subset; driver
     state = affected dir names + match counts, never rows), then
-    stage-rewrite only those dirs and swap each atomically (aside +
-    rollback, the overwrite_rows pattern). Untouched batches are
-    never rewritten — at 100 TB a targeted delete (one device, one
-    day) touches the few batches whose footer stats admit the
-    predicate, not the table. A vacuum base's absorbed manifest is
-    carried into its rewrite (losing it would resurrect
-    crashed-vacuum leftovers in list_batches)."""
+    stage-rewrite only those dirs and swap them all in ONE manifest
+    commit. Untouched batches are never rewritten — at 100 TB a
+    targeted delete (one device, one day) touches the few batches
+    whose footer stats admit the predicate, not the table. A vacuum
+    base's absorbed manifest is carried into its rewrite (the
+    incremental refreshes' fold proof reads it)."""
     table_dir = table_path(warehouse_dir, name)
-    batches = list_batches(warehouse_dir, name)
     # partition-overwrite layout (gold tables): no batch dirs, data
     # under key=value version dirs — a row rewrite here would
     # otherwise report 0 matches and silently erase NOTHING (r9
     # review: unacceptable for the right-to-erasure primitive).
-    # Decided from the AUTHORITATIVE signals (r10, advisor item):
-    # the manifest's declared layout or the committed
-    # _partitions.json — never by scanning dirnames for '=', which
-    # let one stray key=value directory inside a normal batch-log
-    # table permanently block its DML/erasure path. The structural
-    # fallback survives ONLY for the legacy pre-manifest gold layout
-    # and only counts key=value dirs that actually HOLD DATA
-    # (parquet files or a version segment, at any depth) — an empty
-    # junk dir is ignored, while a legacy partitioned table that
-    # somehow also grew a batch dir is still refused rather than
-    # silently erasing nothing from its partition files (r10 review:
-    # the first cut gated on `not batches`, which let exactly that
-    # mixed state through).
-    def _partition_dir_holds_data(d: str) -> bool:
-        for root, _dirs, files in os.walk(os.path.join(table_dir, d)):
-            if any(
-                f.endswith(".parquet") and not f.startswith((".", "_"))
-                for f in files
-            ):
-                return True
-        return False
-
-    if os.path.isdir(table_dir) and (
+    # Decided from the AUTHORITATIVE signals (r10, advisor item): the
+    # manifest's declared layout or the committed _partitions.json —
+    # never by scanning dirnames for '=', which let one stray
+    # key=value directory inside a batch-log table permanently block
+    # its DML/erasure path.
+    if (
         _manifest(warehouse_dir, name).get("layout") == "partition-overwrite"
         or os.path.exists(os.path.join(table_dir, PARTITIONS_MANIFEST))
-        or any(
-            "=" in d
-            and not d.startswith("batch-")
-            and os.path.isdir(os.path.join(table_dir, d))
-            and _partition_dir_holds_data(d)
-            for d in os.listdir(table_dir)
-        )
     ):
         raise ValueError(
             f"{verb} targets partition-overwrite table {name!r}: row "
@@ -1180,8 +1001,7 @@ def _rewrite_matching_batches(
             "rebuild the affected partitions via overwrite_partitions"
         )
     if _manifest(warehouse_dir, name).get("layout") == "snapshot":
-        # v2 snapshot tables hold batch dirs (single-batch manifest
-        # form), so the root-file check below cannot catch them — the
+        # snapshot tables hold one batch dir like any batch log — the
         # layout stamp is the refusal signal: a row edit here would be
         # silently clobbered by the next wholesale rebuild
         raise ValueError(
@@ -1189,27 +1009,7 @@ def _rewrite_matching_batches(
             "snapshot tables are rebuilt wholesale (overwrite_rows), "
             "not row-rewritten"
         )
-    # root-level part files are not batch-granular; matches there
-    # need a snapshot rebuild. Only a LEGACY (manifest-less) table
-    # counts them — under a manifest they are replaced/provisioning
-    # junk no reader resolves (read_table r13).
-    root = [
-        os.path.join(table_dir, f)
-        for f in (os.listdir(table_dir) if os.path.isdir(table_dir) else [])
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    ] if _batches_manifest(table_dir) is None else []
-    if root:
-        hit = (
-            find_matches(_read_paths(spark, warehouse_dir, name, root))
-            .limit(1)
-            .count()
-        )
-        if hit:
-            raise ValueError(
-                f"{verb} matches rows in {name!r}'s root-level snapshot "
-                "files; snapshot tables are rebuilt wholesale "
-                "(overwrite_rows), not row-rewritten"
-            )
+    batches = list_batches(warehouse_dir, name)
     if not batches:
         return {"batches_rewritten": 0, "rows_matched": 0, "_affected": []}
     hits = (
@@ -1226,30 +1026,12 @@ def _rewrite_matching_batches(
         return {"batches_rewritten": 0, "rows_matched": 0, "_affected": []}
     staging_root = os.path.join(warehouse_dir, ".staging")
     os.makedirs(staging_root, exist_ok=True)
-    if _batches_manifest(table_dir) is None:
-        # r13 sunset: the legacy per-dir aside-swap branch is gone —
-        # a manifest-less table migrates FIRST (gen-0 manifest from
-        # the absorbed-filtered listing, under the naming lock), then
-        # the one atomic cross-batch rewrite below applies.
-        with _manifest_lock(table_dir, name) as still_mine:
-            if _batches_manifest(table_dir) is None:
-                _refuse_root_rows(table_dir, name, "row DML")
-                _commit_batches(
-                    table_dir,
-                    name,
-                    list_batches(warehouse_dir, name),
-                    0,
-                    still_mine,
-                )
-    # layout v2: every rewritten batch publishes under a fresh
-    # VERSIONED name (`.rw<8hex>` — same stamp prefix, same -vb
-    # suffix, same fold identity via batch_fold_id) while staying
-    # invisible, then ALL affected batches swap in ONE manifest
-    # commit. That makes row DML cross-batch ATOMIC — a reader
-    # sees the whole delete/update or none of it — which the
-    # rename layout's per-dir swap sequence could not express
-    # (its crash mid-sequence left the DML half-applied; re-run
-    # converged but readers could observe the partial state).
+    # every rewritten batch publishes under a fresh VERSIONED name
+    # (`.rw<8hex>` — same stamp prefix, same -vb suffix, same fold
+    # identity via batch_fold_id) while staying invisible, then ALL
+    # affected batches swap in ONE manifest commit: row DML is
+    # cross-batch ATOMIC — a reader sees the whole delete/update or
+    # none of it.
     renames: list[tuple[str, str]] = []
     committed = False
     try:
@@ -1548,7 +1330,10 @@ def describe_table(warehouse_dir: str, name: str) -> dict[str, object]:
     VERDICT r8 #7): a lock_age_s approaching LOCK_TTL_S on a
     supposedly-running maintenance job is the heartbeat-thread-died
     signal, and lock_stale says the next contender will take over."""
-    batches = list_batches(warehouse_dir, name)
+    # one manifest read: batch_count and batch_generation describe the
+    # same generation even while a writer commits
+    bm = _live_manifest(table_path(warehouse_dir, name), name)
+    batches = sorted(bm["live"]) if bm is not None else []
     bases = [b for b in batches if b.endswith(VACUUM_BASE_SUFFIX)]
     schema = table_schema(warehouse_dir, name)
     lock_age_s = lock_holder = None
@@ -1570,32 +1355,9 @@ def describe_table(warehouse_dir: str, name: str) -> dict[str, object]:
         # released (or replaced) mid-snapshot: report a consistent
         # "no lock" row rather than a half-read one
         lock_age_s = lock_holder = None
-    bm = _batches_manifest(table_path(warehouse_dir, name)) if os.path.isdir(
-        table_path(warehouse_dir, name)
-    ) else None
     return {
         "batch_count": len(batches),
         "vacuum_bases": len(bases),
-        # commit-protocol surface (r11): manifest-committed tables are
-        # object-store-safe; "rename" means legacy — run
-        # migrate_batch_manifest at the next maintenance window
-        "layout": "batch-manifest" if bm is not None else "rename",
-        # sunset state (r12): a legacy table is on notice — the
-        # default maintenance path stamps it on first sight and
-        # migrates it the pass after (warehouse_maintenance docstring)
-        "layout_sunset": (
-            None
-            if bm is not None or not batches
-            else (
-                "auto-migrates at next default maintenance pass"
-                if _manifest(warehouse_dir, name).get(
-                    "legacy_layout_noticed_ns"
-                )
-                else "legacy rename layout — sunset notice pending; "
-                     "next default maintenance pass stamps it, the "
-                     "one after migrates"
-            )
-        ),
         "batch_generation": bm["generation"] if bm is not None else None,
         "retention_point_ns": (
             int(_batch_ns_prefix(bases[-1])) if bases else None
@@ -1729,43 +1491,18 @@ def _base_absorbed(base_dir: str) -> list[str]:
         return []
 
 
-def _absorbed_set(table_dir: str, dirs: list[str]) -> set[str]:
-    """Union of every on-disk base's absorbed list — including bases
-    that are themselves absorbed (a doubly-crashed chain's leftovers
-    are only named by the intermediate base's manifest)."""
-    absorbed: set[str] = set()
-    for d in dirs:
-        if d.endswith(VACUUM_BASE_SUFFIX):
-            absorbed.update(_base_absorbed(os.path.join(table_dir, d)))
-    return absorbed
-
-
 def list_batches(warehouse_dir: str, name: str) -> list[str]:
     """LIVE batch dirs of an append table, in commit order (the batch
-    id's time_ns prefix sorts lexically). A dir named in any base's
-    absorbed manifest is NOT live: it is a leftover of a vacuum that
-    crashed between base publish and cleanup (VERDICT r7 #2) — its
-    rows are already inside the base, so reading it would double-count
-    and re-merging it would bake duplicates in permanently. Filtering
-    here makes every consumer (read_table, read_table_as_of, the
-    incremental refreshes, describe_table, the next vacuum)
-    crash-consistent; vacuum_table physically GCs the leftovers.
-
-    Layout v2: when `_batches.json` is committed, the manifest IS the
-    live set — one manifest read, no directory listing, no absorbed
-    filtering (an uncommitted/orphan dir is never named by the
-    manifest in the first place)."""
-    table_dir = table_path(warehouse_dir, name)
-    if not os.path.isdir(table_dir):
-        return []
-    m = _batches_manifest(table_dir)
-    if m is not None:
-        return sorted(m["live"])
-    dirs = sorted(d for d in os.listdir(table_dir) if d.startswith("batch-"))
-    absorbed = _absorbed_set(table_dir, dirs)
-    if absorbed:
-        dirs = [d for d in dirs if d not in absorbed]
-    return dirs
+    id's time_ns prefix sorts lexically): exactly the list the
+    committed ``_batches.json`` names — one manifest read, no
+    directory listing. Dirs the manifest does not name (a crashed
+    append's or DML's invisible output, a vacuum's absorbed
+    leftovers) are never live; vacuum_table GCs them. Every consumer
+    (read_table, read_table_as_of, the incremental refreshes,
+    describe_table, the next vacuum) resolves through here, so a
+    table left by a retired layout raises (_live_manifest)."""
+    m = _live_manifest(table_path(warehouse_dir, name), name)
+    return sorted(m["live"]) if m is not None else []
 
 
 # Lease liveness: the holder heartbeats the lock inode every
@@ -2093,15 +1830,13 @@ def _merge_batches(
     vacuum-base batch stamped with the newest absorbed publish time —
     any as-of at or after that stamp reads identically pre/post merge
     (the base substitutes for exactly the absorbed prefix). Staged
-    write + one rename. The staged base carries an `_absorbed.json`
-    naming every dir it replaces (plus, transitively, everything an
-    absorbed base had itself replaced — the index_segments absorbed-
-    manifest pattern), committed atomically WITH the base: a crash
-    between base publish and cleanup leaves the absorbed dirs on disk
-    but not LIVE — list_batches filters them, so reads never
-    double-count and the next vacuum GCs them instead of re-merging
-    them (VERDICT r7 #2: the pre-r8 code had no manifest, so that
-    crash window permanently baked in duplicates)."""
+    write + one naming rename + ONE manifest commit that swaps the
+    absorbed dirs for the base: a crash after the commit leaves the
+    absorbed dirs on disk but not LIVE, so reads never double-count
+    and the next vacuum GCs them instead of re-merging them. The base
+    carries an `_absorbed.json` naming every dir it replaces (plus,
+    transitively, everything an absorbed base had itself replaced),
+    which the incremental refreshes' fold proof reads."""
     table_dir = table_path(warehouse_dir, name)
     staging_root = os.path.join(warehouse_dir, ".staging")
     os.makedirs(staging_root, exist_ok=True)
@@ -2142,20 +1877,7 @@ def _merge_batches(
         with open(os.path.join(staged, ABSORBED_MANIFEST), "w") as fh:
             json.dump({"absorbed": sorted(set(absorbed))}, fh)
         _check_fence()  # abort a TTL-fenced vacuum before base publish
-        if _batches_manifest(table_dir) is None:
-            # r13 sunset: a manifest-less table migrates before the
-            # base commits (legacy rename-commit write branch gone)
-            with _manifest_lock(table_dir, name) as still_mine:
-                if _batches_manifest(table_dir) is None:
-                    _refuse_root_rows(table_dir, name, "vacuum_table")
-                    _commit_batches(
-                        table_dir,
-                        name,
-                        list_batches(warehouse_dir, name),
-                        0,
-                        still_mine,
-                    )
-        # layout v2: the rename below only NAMES the base (still
+        # the rename below only NAMES the base (still
         # invisible — not in the manifest); the commit is the ONE
         # manifest swap removing the absorbed dirs and adding the
         # base. Appends landing between this vacuum's listing and
@@ -2244,15 +1966,10 @@ def vacuum_table(
     if retain_last_n < 0:
         raise ValueError("retain_last_n must be >= 0")
     with writer_lock(warehouse_dir, name):
-        # self-heal first: physically GC any absorbed leftover a prior
-        # vacuum's crash stranded (invisible to readers already — the
-        # absorbed manifest filters them — but still paying listing
-        # cost and disk). The full absorbed union is computed BEFORE
-        # any deletion so a doubly-crashed chain's intermediate base
-        # still contributes its list.
         table_dir = table_path(warehouse_dir, name)
-        if os.path.isdir(table_dir) and _batches_manifest(table_dir) is not None:
-            # layout v2 heal: any on-disk batch dir the manifest does
+        # _live_manifest refuses a retired layout before anything runs
+        if _live_manifest(table_dir, name) is not None:
+            # self-heal first: any on-disk batch dir the manifest does
             # not name is an orphan — a crashed append/vacuum/DML's
             # invisible leftover. The orphan set is computed under the
             # manifest lock (an in-flight append holds it across its
@@ -2268,14 +1985,6 @@ def vacuum_table(
                     if d.startswith("batch-") and d not in live
                 ]
             for leftover in orphans:
-                shutil.rmtree(
-                    os.path.join(table_dir, leftover), ignore_errors=True
-                )
-        elif os.path.isdir(table_dir):
-            on_disk = [
-                d for d in os.listdir(table_dir) if d.startswith("batch-")
-            ]
-            for leftover in _absorbed_set(table_dir, on_disk) & set(on_disk):
                 shutil.rmtree(
                     os.path.join(table_dir, leftover), ignore_errors=True
                 )
@@ -2298,7 +2007,6 @@ def warehouse_maintenance(
     warehouse_dir: str,
     retain_last_n: int = 24,
     cluster_by: dict[str, list[str]] | None = None,
-    migrate_layout: bool | None = None,
 ) -> dict[str, int]:
     """One retention pass over every provisioned warehouse table —
     the batch-log twin of pipeline.funnel_maintenance, schedulable
@@ -2306,84 +2014,21 @@ def warehouse_maintenance(
     day of hourly as-of versions addressable while bounding every
     table at 25 live directories. ``cluster_by`` maps table name →
     clustering columns for that table's vacuum base (see
-    vacuum_table); tables not in the map compact unclustered.
-
-    LEGACY-LAYOUT SUNSET (r12, VERDICT r11 #8): rename-committed
-    batch-log tables are not object-store-safe, and a warehouse that
-    never opts in stays legacy forever. ``migrate_layout`` is now a
-    tri-state:
-
-    - ``None`` (default) — grace-then-migrate: the FIRST maintenance
-      pass that meets a legacy table stamps a sunset notice in its
-      schema manifest (surfaced by ``describe_table`` as
-      ``layout_sunset``); the NEXT pass migrates it in place. One
-      full maintenance interval of warning, then the safe layout by
-      default.
-    - ``True`` — migrate immediately (the one-window rollout path).
-    - ``False`` — never auto-migrate (explicit opt-out for a
-      deployment pinned to the rename layout).
-
-    Migration itself is migrate_batch_manifest: idempotent,
-    lease-guarded, linearized against concurrent appends. Returns
-    batches reclaimed per table (0 = already within retention)."""
-    reclaimed: dict[str, int] = {}
-    for name in WAREHOUSE_TABLES:
-        td = table_path(warehouse_dir, name)
-        if not os.path.isdir(td):
-            continue
-        # ADVICE r13 (high): a plain root-file table (rows in root
-        # part files, no batch dirs) is ALSO legacy — pre-r14
-        # maintenance never migrated it, and the first append would
-        # have dropped its root rows (now it refuses). Data-bearing
-        # root files route through migrate_root_file_table, which
-        # folds them into the gen-0 snapshot batch.
-        root_rows = 0 if _batches_manifest(td) is not None else _root_rows(td)
-        legacy = _batches_manifest(td) is None and (
-            root_rows > 0
-            or any(d.startswith("batch-") for d in os.listdir(td))
-        )
-
-        def _migrate() -> None:
-            if root_rows > 0:
-                migrate_root_file_table(spark, warehouse_dir, name)
-            else:
-                migrate_batch_manifest(warehouse_dir, name)
-
-        if legacy and migrate_layout is True:
-            _migrate()
-        elif legacy and migrate_layout is None:
-            m = _manifest(warehouse_dir, name)
-            if m.get("legacy_layout_noticed_ns"):
-                # the grace interval (one maintenance pass) elapsed
-                _migrate()
-            else:
-                # ADVICE r12 (low): the sunset stamp is a schema-
-                # manifest read-modify-write — serialize it under the
-                # table's writer lease like every other one, so it
-                # cannot publish a stale manifest copy over a racing
-                # leased DDL's just-committed constraint/rename.
-                with writer_lock(warehouse_dir, name):
-                    m = _manifest(warehouse_dir, name)
-                    if not m.get("legacy_layout_noticed_ns"):
-                        m["legacy_layout_noticed_ns"] = _publish_stamp_ns()
-                        if "schema" not in m and name in WAREHOUSE_TABLES:
-                            m["schema"] = WAREHOUSE_TABLES[name].jsonValue()
-                        _publish_manifest(warehouse_dir, name, m)
-        if root_rows > 0 and _batches_manifest(td) is None:
-            # still in the sunset grace window (or migrate_layout is
-            # False): vacuum's migrate-first would refuse while root
-            # rows exist — leave the table untouched this pass rather
-            # than fail the whole maintenance run
-            reclaimed[name] = 0
-            continue
-        reclaimed[name] = vacuum_table(
+    vacuum_table); tables not in the map compact unclustered. Each
+    table is one vacuum_table call, so a table left by a retired
+    layout raises like every other mutator. Returns batches
+    reclaimed per table (0 = already within retention)."""
+    return {
+        name: vacuum_table(
             spark,
             warehouse_dir,
             name,
             retain_last_n,
             cluster_by=(cluster_by or {}).get(name),
         )
-    return reclaimed
+        for name in WAREHOUSE_TABLES
+        if os.path.isdir(table_path(warehouse_dir, name))
+    }
 
 
 def compact_table(spark: SparkSession, warehouse_dir: str, name: str) -> int:
@@ -2403,18 +2048,37 @@ def compact_table(spark: SparkSession, warehouse_dir: str, name: str) -> int:
 
 
 PARTITIONS_MANIFEST = "_partitions.json"
-_VERSION_SEG = "__rrpv"  # versioned leaf dir: <part>=<val>/__rrpv=<hex>
+# versioned leaf dir: <part>=<val>/v-<12 hex>. No '=' in the name, so
+# Spark never reads the leaf as a partition column — a hex name such as
+# `1e0123456789` would otherwise be type-inferred as a number in
+# scientific notation, and that inference computes 10**N (the read hangs).
+_VERSION_PREFIX = "v-"
 
 
 def _partitions_manifest(table_dir: str) -> dict[str, str] | None:
-    """{partition relpath (e.g. 'date=2024-03-01'): version segment
-    ('__rrpv=<hex>')} — the committed partition set. None = table has
-    never been written through the versioned path (legacy layout)."""
+    """{partition relpath (e.g. 'date=2024-03-01'): version leaf
+    ('v-<hex>')} — the committed partition set. None = no partition
+    was ever committed."""
     try:
         with open(os.path.join(table_dir, PARTITIONS_MANIFEST)) as fh:
             return dict(json.load(fh)["partitions"])
     except (OSError, ValueError, KeyError):
         return None
+
+
+def _committed_partitions(table_dir: str, name: str) -> dict[str, str]:
+    """The committed partition set ({} if none), refusing one whose
+    leaves are not ``v-<hex>`` versions: a leaf named ``key=value``
+    is read by Spark as one more partition column, so it must never
+    be read or mixed with ``v-`` leaves."""
+    committed = _partitions_manifest(table_dir) or {}
+    if any(not v.startswith(_VERSION_PREFIX) for v in committed.values()):
+        raise _retired_layout(
+            name,
+            f"has {PARTITIONS_MANIFEST} entries whose version leaves "
+            f"are not {_VERSION_PREFIX}<hex>",
+        )
+    return committed
 
 
 def overwrite_partitions(
@@ -2429,14 +2093,14 @@ def overwrite_partitions(
     1000-executor deployment recomputes just the recent dates and
     swaps those date partitions in place.
 
-    Pre-r8 this was Spark's ``partitionOverwriteMode=dynamic``, which
-    swaps each date dir atomically but not the SET — a concurrent
-    reader could see mixed old/new dates mid-refresh. Now each
-    partition's files live under a versioned leaf dir
-    (``date=X/__rrpv=<hex>``, invisible until referenced) and the
-    entire touched set commits through ONE atomic manifest rename
-    (``_partitions.json``, resolved by read_partitioned exactly like
-    table_schema resolves ``_schema.json``): every reader sees all
+    Spark's ``partitionOverwriteMode=dynamic`` swaps each date dir
+    atomically but not the SET — a concurrent reader could see mixed
+    old/new dates mid-refresh. Here each partition's files live under
+    a versioned leaf dir (``date=X/v-<hex>``, invisible until
+    referenced) and the entire touched set commits through ONE atomic
+    manifest rename (``_partitions.json``, resolved by
+    read_partitioned exactly like table_schema resolves
+    ``_schema.json``): every reader sees all
     touched dates old, or all new — never mixed, never missing.
     A crash before the manifest rename leaves only unreferenced
     version dirs (readers unaffected; a deterministic re-run
@@ -2448,9 +2112,11 @@ def overwrite_partitions(
     its files for a full maintenance interval. Disk cost: at most two
     versions per partition.
 
-    A legacy table (files directly under ``date=X``) is migrated to
-    the versioned layout on first write; read_partitioned falls back
-    to a plain read when no manifest exists.
+    A batch-log table is refused, and so is a table with no
+    ``_partitions.json`` that holds files directly under ``key=value``
+    dirs (the retired pre-manifest partition layout) — list_batches
+    raises for it — or one whose committed leaves are not ``v-<hex>``
+    versions (_committed_partitions).
     """
     df = _fuse_constraints(df, warehouse_dir, name, verb="overwrite")
     table_dir = table_path(warehouse_dir, name)
@@ -2465,9 +2131,7 @@ def overwrite_partitions(
             "the batch log cannot share a table — use append_rows/"
             "delete_rows there, or a separate gold table here"
         )
-    committed = _partitions_manifest(table_dir)
-    if committed is None:
-        committed = _migrate_legacy_partitions(table_dir)
+    committed = _committed_partitions(table_dir, name)
     # entry GC: reclaim version dirs no manifest references (previous
     # overwrite's superseded versions + crash orphans)
     for key, vseg in list(committed.items()):
@@ -2475,7 +2139,7 @@ def overwrite_partitions(
         if not os.path.isdir(part_dir):
             continue
         for d in os.listdir(part_dir):
-            if d.startswith(f"{_VERSION_SEG}=") and d != vseg:
+            if d.startswith(_VERSION_PREFIX) and d != vseg:
                 shutil.rmtree(os.path.join(part_dir, d), ignore_errors=True)
 
     staging_root = os.path.join(warehouse_dir, ".staging")
@@ -2494,7 +2158,7 @@ def overwrite_partitions(
                 continue
             if rel.count(os.sep) + 1 != len(partition_cols):
                 continue  # not a leaf partition dir
-            vseg = f"{_VERSION_SEG}={uuid.uuid4().hex[:12]}"
+            vseg = f"{_VERSION_PREFIX}{uuid.uuid4().hex[:12]}"
             dst_parent = os.path.join(table_dir, rel)
             os.makedirs(dst_parent, exist_ok=True)
             os.replace(root, os.path.join(dst_parent, vseg))
@@ -2537,60 +2201,6 @@ def overwrite_partitions(
             shutil.rmtree(staged, ignore_errors=True)
 
 
-def _migrate_legacy_partitions(table_dir: str) -> dict[str, str]:
-    """One-time layout migration: move files of each legacy
-    ``key=value`` dir (written by the pre-r8 dynamic overwrite) under
-    a version segment and commit the initial manifest. Runs only when
-    no manifest exists; a fresh table yields an empty mapping."""
-    pointers: dict[str, str] = {}
-
-    def _walk(rel: str) -> None:
-        full = os.path.join(table_dir, rel) if rel else table_dir
-        # r13: heal a crashed earlier attempt first — files stranded
-        # in an invisible `.mig-*` staging dir move BACK before this
-        # retry re-partitions, so a kill mid-move can never strand
-        # rows out of the retry's version segment
-        for e in os.listdir(full):
-            if e.startswith(".mig-"):
-                stray = os.path.join(full, e)
-                for f in os.listdir(stray):
-                    os.replace(
-                        os.path.join(stray, f), os.path.join(full, f)
-                    )
-                os.rmdir(stray)
-        entries = os.listdir(full)
-        part_dirs = [
-            e for e in entries
-            if "=" in e
-            and not e.startswith(f"{_VERSION_SEG}=")
-            and os.path.isdir(os.path.join(full, e))
-        ]
-        data_files = [
-            e for e in entries
-            if e.endswith(".parquet") and not e.startswith((".", "_"))
-        ]
-        if rel and data_files and not part_dirs:
-            vseg = f"{_VERSION_SEG}={uuid.uuid4().hex[:12]}"
-            tmp = os.path.join(full, f".mig-{uuid.uuid4().hex[:8]}")
-            os.makedirs(tmp)
-            for f in data_files:
-                os.replace(os.path.join(full, f), os.path.join(tmp, f))
-            os.replace(tmp, os.path.join(full, vseg))
-            pointers[rel.replace(os.sep, "/")] = vseg
-            return
-        for e in part_dirs:
-            _walk(os.path.join(rel, e) if rel else e)
-
-    if os.path.isdir(table_dir):
-        _walk("")
-    if pointers:
-        commit_pointer(
-            os.path.join(table_dir, PARTITIONS_MANIFEST),
-            json.dumps({"partitions": pointers}).encode(),
-        )
-    return pointers
-
-
 def read_partitioned(
     spark: SparkSession, warehouse_dir: str, name: str
 ) -> DataFrame:
@@ -2604,18 +2214,19 @@ def read_partitioned(
     filters on them prune directories at planning time
     (PartitionFilters — pinned in tests/test_atomic_sink.py), so a
     query for one date never lists or opens the other dates' files.
-    Tables without a manifest (never written through the versioned
-    path) fall back to a plain directory read."""
+    A table with no committed partition raises: it has no schema to
+    read under. So does one whose committed leaves are not ``v-<hex>``
+    versions (_committed_partitions)."""
     table_dir = table_path(warehouse_dir, name)
-    committed = _partitions_manifest(table_dir)
+    committed = _committed_partitions(table_dir, name)
     if not committed:
-        return spark.read.parquet(table_dir)
+        _live_manifest(table_dir, name)  # a retired layout says so
+        raise ValueError(
+            f"table {name!r} has no committed partitions: "
+            "overwrite_partitions has not published it yet"
+        )
     paths = [
         os.path.join(table_dir, key.replace("/", os.sep), vseg)
         for key, vseg in sorted(committed.items())
     ]
-    return (
-        spark.read.option("basePath", table_dir)
-        .parquet(*paths)
-        .drop(_VERSION_SEG)
-    )
+    return spark.read.option("basePath", table_dir).parquet(*paths)

@@ -11,8 +11,8 @@ The fix: a Python Data Source whose ``read()`` lists the table's LIVE
 batch dirs at EXECUTION time — every query against the view (each
 query plans a fresh scan; verified empirically, not assumed) sees
 every batch published up to that moment, with the same crash
-consistency as read_table (absorbed leftovers filtered via the vacuum
-base's manifest) and the same migration resolution (evolved columns
+consistency as read_table (the committed batch manifest is the read
+set) and the same migration resolution (evolved columns
 null on old batches, widened types promoted, renamed columns
 recovered from their retired physical names).
 
@@ -175,18 +175,12 @@ class WarehouseTableReader(DataSourceReader):
 
     def _live_files(self) -> list[str]:
         """The table's data files AT THIS INSTANT — the whole point of
-        the data source. Same read set as sinks.read_table: root part
-        files plus live (absorbed-filtered) batch dirs."""
+        the data source. Same read set as sinks.read_table: the live
+        batch dirs list_batches resolves from the manifest."""
         from roborock_data_pipeline_spark.sources import sinks
 
         table_dir = sinks.table_path(self.warehouse_dir, self.table)
-        if not os.path.isdir(table_dir):
-            return []
-        files = [
-            os.path.join(table_dir, f)
-            for f in os.listdir(table_dir)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
+        files = []
         for b in sinks.list_batches(self.warehouse_dir, self.table):
             bdir = os.path.join(table_dir, b)
             for root, _dirs, names in os.walk(bdir):

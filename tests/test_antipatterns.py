@@ -115,10 +115,10 @@ def test_driver_collects_stay_metadata_sized():
 # r13 (VERDICT r12 #1 done-condition): NO os.replace may make a
 # target reader-visible — a rename is either (a) inside
 # commit_provider itself (the local-FS form of the atomic pointer
-# PUT / rename-aside steal), (b) pure NAMING under a naming lock
-# (the dir stays invisible until a manifest/pointer commit), or
-# (c) a one-time read+migrate layout upgrade. Adding a rename
-# anywhere else must fail this pin and force a conscious review.
+# PUT / rename-aside steal) or (b) pure NAMING under a naming lock
+# (the dir stays invisible until a manifest/pointer commit). Adding
+# a rename anywhere else must fail this pin and force a conscious
+# review.
 REPLACE_ALLOW = {
     # (a) the provider's own primitives
     "sources/commit_provider.py": 2,   # swap_pointer tmp->path; steal aside
@@ -129,14 +129,11 @@ REPLACE_ALLOW = {
     "operators/index_segments.py": 3,  # publish/commit_base naming + trash rename
     "operators/funnel_txn.py": 1,      # roll-forward naming (record = commit)
     "streaming/near_dup_pairs.py": 2,  # epoch naming + trash rename
-    "sources/sinks.py": 9,             # append/overwrite/DML-rw/merge-base
+    "sources/sinks.py": 5,             # append/overwrite/DML-rw/merge-base
                                        # naming under _manifest_lock (4 sites)
-                                       # + migrate_root_file_table's naming
-                                       # (r14, same pattern: invisible until
-                                       # the gen-0 manifest swap),
-                                       # plus (c) _migrate_legacy_partitions'
-                                       # one-time layout upgrade (3 calls +
-                                       # the crashed-attempt heal move-back)
+                                       # + overwrite_partitions' version-leaf
+                                       # naming (invisible until the
+                                       # _partitions.json commit)
     # local build artifact (executor zip), not a data commit
     "session.py": 1,
 }

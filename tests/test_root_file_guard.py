@@ -1,27 +1,9 @@
-"""ADVICE r13 (high) — first-manifest root-file guard.
-
-The instant a table's first ``_batches.json`` commits, read_table
-stops reading root-level part files (they become "provisioning
-empties or a replaced snapshot awaiting GC"). r13's layout sunset
-made every first-commit path build that manifest from the batch-dir
-listing alone, WITHOUT verifying the root files were row-free — so a
-pre-r11 plain-parquet table (rows in root part files) that received
-an append, a DML, a vacuum, or a maintenance migration had its root
-rows silently vanish from all subsequent reads.
-
-These tests pin the fix:
-
-- every first-manifest path (append_rows, migrate_batch_manifest,
-  row DML's migrate-first, vacuum's migrate-first) REFUSES loudly
-  while root part files carry rows, and the legacy read stays intact;
-- ``migrate_root_file_table`` folds root rows (and any legacy batch
-  dirs) into ONE gen-0 snapshot batch with nothing lost, after which
-  appends flow normally;
-- ``warehouse_maintenance`` treats a root-file table as legacy:
-  sunset grace pass (no crash, table untouched), then migration via
-  the spark-aware helper;
-- provisioning EMPTIES (0-row root files) never trip the guard;
-- an unreadable root file is treated as data-bearing and refused.
+"""Root-file guard: a table with no ``_batches.json`` whose dir
+holds part files at its root (the retired plain-parquet layout),
+alone or next to batch dirs, is refused by every reader and mutator —
+never read as empty, never committed over. A freshly provisioned
+table holds no part files, and a table provisioned by an older
+empty-DataFrame write holds only 0-row ones, so neither trips it.
 """
 
 from __future__ import annotations
@@ -100,25 +82,7 @@ def _rows(spark, wh) -> int:
     return sinks.read_table(spark, wh, NAME).count()
 
 
-def test_append_refuses_and_keeps_legacy_read(spark, wh):
-    _plant_root_rows(spark, wh, n=5)
-    assert _rows(spark, wh) == 5
-    with pytest.raises(ValueError, match="migrate_root_file_table"):
-        sinks.append_rows(_mk(spark, 9), wh, NAME)
-    # nothing committed, nothing lost: still the legacy read set
-    td = sinks.table_path(wh, NAME)
-    assert sinks._batches_manifest(td) is None  # noqa: SLF001
-    assert _rows(spark, wh) == 5
-
-
-def test_migrate_batch_manifest_refuses(spark, wh):
-    sinks.append_rows(_mk(spark, 1), wh, NAME)
-    _strip_manifest(wh)
-    _plant_root_rows(spark, wh, i=2, n=3)
-    assert _rows(spark, wh) == 4  # mixed legacy: 1 batch row + 3 root
-    with pytest.raises(ValueError, match="root-level part files"):
-        sinks.migrate_batch_manifest(wh, NAME)
-    assert _rows(spark, wh) == 4
+RETIRED = "retired pre-manifest layout"
 
 
 def test_vacuum_and_dml_refuse_on_mixed_legacy(spark, wh):
@@ -126,99 +90,52 @@ def test_vacuum_and_dml_refuse_on_mixed_legacy(spark, wh):
         sinks.append_rows(_mk(spark, i), wh, NAME)
     _strip_manifest(wh)
     _plant_root_rows(spark, wh, i=7, n=2)
-    assert _rows(spark, wh) == 5
-    with pytest.raises(ValueError, match="root-level part files"):
+    td = sinks.table_path(wh, NAME)
+    before = sorted(os.listdir(td))
+    with pytest.raises(ValueError, match=RETIRED):
         sinks.vacuum_table(spark, wh, NAME, 0)
-    # a predicate matching root rows hits the pre-existing snapshot
-    # refusal; one matching ONLY batch-dir rows reaches the new
-    # migrate-first guard — both must refuse
-    with pytest.raises(ValueError, match="root-level"):
-        sinks.delete_rows(spark, wh, NAME, "device_name = 'd1'")
-    with pytest.raises(ValueError, match="root-level part files"):
-        sinks.delete_rows(spark, wh, NAME, "device_name = 'd0'")
-    assert _rows(spark, wh) == 5
+    # whether a predicate matches root rows (d1) or only batch-dir
+    # rows (d0), the DML refuses before it scans anything
+    for pred in ("device_name = 'd1'", "device_name = 'd0'"):
+        with pytest.raises(ValueError, match=RETIRED):
+            sinks.delete_rows(spark, wh, NAME, pred)
+    with pytest.raises(ValueError, match=RETIRED):
+        _rows(spark, wh)
+    assert sorted(os.listdir(td)) == before
 
 
-def test_migrate_root_file_table_preserves_rows(spark, wh):
-    _plant_root_rows(spark, wh, n=5)
-    assert sinks.migrate_root_file_table(spark, wh, NAME) == 0
-    td = sinks.table_path(wh, NAME)
-    m = sinks._batches_manifest(td)  # noqa: SLF001
-    assert m is not None and m["generation"] == 0
-    assert len(m["live"]) == 1
-    assert _rows(spark, wh) == 5
-    # the replaced root files are GC'd, and appends now flow
-    assert sinks._root_rows(td) == 0  # noqa: SLF001
-    sinks.append_rows(_mk(spark, 9), wh, NAME)
-    assert _rows(spark, wh) == 6
-    # idempotent: returns the current generation, changes nothing
-    assert sinks.migrate_root_file_table(spark, wh, NAME) == 1
-    assert _rows(spark, wh) == 6
-
-
-def test_migrate_root_file_table_mixed_legacy(spark, wh):
-    for i in range(2):
-        sinks.append_rows(_mk(spark, i), wh, NAME)
-    _strip_manifest(wh)
-    _plant_root_rows(spark, wh, i=5, n=3)
-    assert _rows(spark, wh) == 5
-    assert sinks.migrate_root_file_table(spark, wh, NAME) == 0
-    assert _rows(spark, wh) == 5
-    td = sinks.table_path(wh, NAME)
-    m = sinks._batches_manifest(td)  # noqa: SLF001
-    # everything folded into the one gen-0 snapshot batch; the
-    # replaced legacy dirs are GC'd
-    assert len(m["live"]) == 1
-    assert sum(1 for d in os.listdir(td) if d.startswith("batch-")) == 1
-
-
-def test_maintenance_grace_then_migrates_root_table(spark, wh):
-    _plant_root_rows(spark, wh, n=4)
-    td = sinks.table_path(wh, NAME)
-    # pass 1: sunset noticed, table untouched (vacuum skipped — it
-    # would refuse), nothing lost
-    sinks.warehouse_maintenance(spark, wh)
-    assert sinks._batches_manifest(td) is None  # noqa: SLF001
-    assert sinks._manifest(wh, NAME)[  # noqa: SLF001
-        "legacy_layout_noticed_ns"
-    ]
-    assert _rows(spark, wh) == 4
-    # pass 2: migrated through the root-aware helper
-    sinks.warehouse_maintenance(spark, wh)
+def test_provisioning_empties_do_not_trip_guard(spark, tmp_path):
+    # a warehouse provisioned by an empty-DataFrame write per table
+    # (how earlier setup_warehouse versions pinned the schema) holds a
+    # 0-row root part file and _SUCCESS in every table dir: those are
+    # not data, so reads, appends and maintenance all proceed
+    w = str(tmp_path / "old")
+    for name, schema in sinks.WAREHOUSE_TABLES.items():
+        spark.createDataFrame([], schema).write.mode("ignore").parquet(
+            sinks.table_path(w, name)
+        )
+    sinks.setup_warehouse(spark, w)
+    td = sinks.table_path(w, NAME)
+    assert any(f.endswith(".parquet") for f in os.listdir(td))
+    assert _rows(spark, w) == 0
+    sinks.append_rows(_mk(spark, 1), w, NAME)
     assert sinks._batches_manifest(td) is not None  # noqa: SLF001
-    assert _rows(spark, wh) == 4
-
-
-def test_maintenance_opt_out_leaves_root_table_alone(spark, wh):
-    _plant_root_rows(spark, wh, n=4)
-    td = sinks.table_path(wh, NAME)
-    for _ in range(2):
-        sinks.warehouse_maintenance(spark, wh, migrate_layout=False)
-        assert sinks._batches_manifest(td) is None  # noqa: SLF001
-        assert _rows(spark, wh) == 4
-
-
-def test_maintenance_immediate_migrates_root_table(spark, wh):
-    _plant_root_rows(spark, wh, n=4)
-    sinks.warehouse_maintenance(spark, wh, migrate_layout=True)
-    td = sinks.table_path(wh, NAME)
-    assert sinks._batches_manifest(td) is not None  # noqa: SLF001
-    assert _rows(spark, wh) == 4
-
-
-def test_provisioning_empties_do_not_trip_guard(spark, wh):
-    # fresh provisioned table: root part files (if any) are 0-row
-    # empties — the bootstrap commit must proceed as before
-    sinks.append_rows(_mk(spark, 1), wh, NAME)
-    td = sinks.table_path(wh, NAME)
-    assert sinks._batches_manifest(td) is not None  # noqa: SLF001
-    assert _rows(spark, wh) == 1
+    assert _rows(spark, w) == 1
+    # a never-written table reads empty, and maintenance visits every
+    # provisioned table without refusing one
+    assert sinks.read_table(spark, w, "consumables").count() == 0
+    assert set(sinks.warehouse_maintenance(spark, w).values()) == {0}
+    assert _rows(spark, w) == 1
 
 
 def test_unreadable_root_file_refuses_loudly(spark, wh):
+    # a root part file whose footer cannot even be read counts as
+    # data: it is refused, not skipped
     td = sinks.table_path(wh, NAME)
     with open(os.path.join(td, "part-junk.parquet"), "wb") as fh:
         fh.write(b"not a parquet footer")
-    _strip_manifest(wh)
-    with pytest.raises(ValueError, match="unreadable root parquet"):
+    with pytest.raises(ValueError, match=RETIRED):
         sinks.append_rows(_mk(spark, 1), wh, NAME)
+    with pytest.raises(ValueError, match=RETIRED):
+        _rows(spark, wh)
+    assert sinks._batches_manifest(td) is None  # noqa: SLF001

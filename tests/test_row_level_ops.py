@@ -343,10 +343,9 @@ def test_partition_layout_refused_via_declared_manifest(spark, warehouse):
 
 
 def test_legacy_partition_dirs_without_batches_still_refused(spark, warehouse):
-    """The structural fallback survives ONLY for the legacy
-    pre-manifest gold layout: key=value dirs and no batch log at
-    all. DML still refuses there rather than silently erasing
-    nothing."""
+    """Data under bare key=value dirs with no _partitions.json and no
+    batch log is the retired pre-manifest gold layout: DML refuses it
+    rather than silently erasing nothing."""
     td = sinks.table_path(warehouse, "daily_summary")
     leaf = os.path.join(td, "date=2024-03-01")
     os.makedirs(leaf, exist_ok=True)
@@ -361,7 +360,7 @@ def test_legacy_partition_dirs_without_batches_still_refused(spark, warehouse):
                 os.path.join(td, ".tmp-legacy", f), os.path.join(leaf, f)
             )
     shutil.rmtree(os.path.join(td, ".tmp-legacy"), ignore_errors=True)
-    with pytest.raises(ValueError, match="partition-overwrite"):
+    with pytest.raises(ValueError, match="retired pre-manifest layout"):
         sinks.delete_rows(
             spark, warehouse, "daily_summary", "device_id = 'dev-a'"
         )
@@ -427,7 +426,7 @@ def test_overwrite_partitions_refuses_batch_log_table(spark, warehouse):
 def test_legacy_partition_data_with_stray_batch_still_refused(
     spark, warehouse
 ):
-    """r10 review: a legacy partitioned table (data under date=X, no
+    """r10 review: a retired partitioned table (data under date=X, no
     manifests) that also grew a stray batch dir must STILL refuse row
     DML — the partition files would be silently skipped otherwise.
     Conversely an EMPTY key=value dir keeps not blocking (covered by
@@ -447,7 +446,7 @@ def test_legacy_partition_data_with_stray_batch_still_refused(
             )
     shutil.rmtree(os.path.join(td, ".tmp-leg2"), ignore_errors=True)
     os.makedirs(os.path.join(td, "batch-00000000000000000001-x"), exist_ok=True)
-    with pytest.raises(ValueError, match="partition-overwrite"):
+    with pytest.raises(ValueError, match="retired pre-manifest layout"):
         sinks.delete_rows(
             spark, warehouse, "daily_summary", "device_id = 'dev-a'"
         )

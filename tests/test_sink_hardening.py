@@ -23,6 +23,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import shutil
 import tempfile
@@ -443,59 +444,73 @@ def test_partition_overwrite_keeps_reader_grace_version(spark, tmp_path):
     assert got == [("2024-01-01", 3)]
 
 
-def test_partition_overwrite_migrates_legacy_layout(spark, tmp_path):
-    """A table written by the pre-r8 plain dynamic overwrite (files
-    directly under date=X) is migrated on first versioned write and
-    reads back identically, untouched dates included."""
+def test_retired_version_leaf_is_refused(spark, tmp_path):
+    """A committed ``_partitions.json`` entry that points at a
+    ``key=value`` leaf (the retired ``__rrpv=<hex>`` naming) is
+    refused by read_partitioned and overwrite_partitions with the one
+    retired-layout ValueError: Spark would read the leaf as an extra
+    partition column, and mixing it with ``v-`` leaves breaks
+    partition discovery. Nothing on disk changes."""
     wh = str(tmp_path / "wh")
-    legacy = _daily(
-        spark, [("2024-01-01", 1, 10.0), ("2024-01-02", 2, 20.0)]
-    )
-    # legacy layout: plain partitioned write, no manifest
-    legacy.write.partitionBy("d").parquet(os.path.join(wh, "daily"))
     sinks.overwrite_partitions(
-        _daily(spark, [("2024-01-02", 99, 99.0)]), wh, "daily", ["d"]
+        _daily(spark, [("2024-01-01", 1, 10.0), ("2024-01-02", 2, 20.0)]),
+        wh, "daily", ["d"],
     )
-    got = {
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-    assert got == {("2024-01-01", 1), ("2024-01-02", 99)}
+    table = os.path.join(wh, "daily")
+    ptr = os.path.join(table, sinks.PARTITIONS_MANIFEST)
+    with open(ptr) as fh:
+        parts = json.load(fh)["partitions"]
+    key = "d=2024-01-01"
+    retired = "__rrpv=1a2b3c4d5e6f"
+    os.replace(
+        os.path.join(table, key, parts[key]),
+        os.path.join(table, key, retired),
+    )
+    parts[key] = retired
+    with open(ptr, "w") as fh:
+        json.dump({"partitions": parts}, fh)
+    before = sorted(
+        os.path.relpath(os.path.join(root, f), table)
+        for root, _dirs, files in os.walk(table)
+        for f in files
+    )
+    with pytest.raises(ValueError, match="retired pre-manifest layout"):
+        sinks.read_partitioned(spark, wh, "daily")
+    with pytest.raises(ValueError, match="retired pre-manifest layout"):
+        sinks.overwrite_partitions(
+            _daily(spark, [("2024-01-02", 3, 30.0)]), wh, "daily", ["d"]
+        )
+    after = sorted(
+        os.path.relpath(os.path.join(root, f), table)
+        for root, _dirs, files in os.walk(table)
+        for f in files
+    )
+    assert after == before
 
 
-def test_partition_migration_heals_crashed_move(spark, tmp_path):
-    """r13: a kill MID-MOVE during the one-time legacy-partition
-    migration strands some files in an invisible `.mig-*` staging dir.
-    The retry must move them BACK first — otherwise it would version
-    only the remaining files and the stranded rows would be lost."""
-    wh = str(tmp_path / "wh")
-    _daily(spark, [("2024-01-01", 1, 10.0)]).write.partitionBy(
-        "d"
-    ).parquet(os.path.join(wh, "daily"))
-    _daily(
-        spark, [("2024-01-01", 2, 20.0), ("2024-01-02", 3, 30.0)]
-    ).write.mode("append").partitionBy("d").parquet(
-        os.path.join(wh, "daily")
+def test_version_leaf_that_reads_as_a_number_does_not_hang(
+    spark, warehouse, monkeypatch
+):
+    """A version leaf named `__rrpv=<12 hex>` was read by Spark as a
+    partition column and type-inferred; a hex name such as
+    `1e0123456789` parses as scientific notation and the inference
+    computed 10**N — read_daily_summary hung. Leaves are now
+    `v-<12 hex>` (no '='), so even that hex name reads back."""
+    import types
+
+    _append(spark, warehouse, [_rec(1, 9), _rec(2, 9, area=20.0)])
+    fixed = types.SimpleNamespace(hex="1e0123456789" + "0" * 20)
+    monkeypatch.setattr(
+        sinks, "uuid", types.SimpleNamespace(uuid4=lambda: fixed)
     )
-    pdir = os.path.join(wh, "daily", "d=2024-01-01")
-    files = [
-        f for f in os.listdir(pdir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    pipeline.refresh_daily_summary(spark, warehouse)
+    monkeypatch.undo()
+    table = sinks.table_path(warehouse, pipeline.GOLD_PART_TABLE)
+    assert os.listdir(os.path.join(table, "date=2024-03-01")) == [
+        "v-1e0123456789"
     ]
-    assert len(files) >= 2
-    # simulate the crash: ONE file already moved into the staging dir
-    stray = os.path.join(pdir, ".mig-deadbeef")
-    os.makedirs(stray)
-    os.replace(os.path.join(pdir, files[0]), os.path.join(stray, files[0]))
-
-    # first versioned write triggers the migration; the heal must
-    # recover the stranded file so every original row survives
-    sinks.overwrite_partitions(
-        _daily(spark, [("2024-01-02", 99, 99.0)]), wh, "daily", ["d"]
+    got = sorted(
+        (r["date"], r["total_cleanings"], r["total_area_m2"])
+        for r in pipeline.read_daily_summary(spark, warehouse).collect()
     )
-    got = {
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-    assert got == {("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 99)}
-    assert not os.path.isdir(stray)
+    assert got == [("2024-03-01", 1, 10.0), ("2024-03-02", 1, 20.0)]

@@ -5,9 +5,9 @@ a ``spark.sql`` user silently read pre-append data until
 re-registering. The views now sit on the ``roborock_warehouse``
 Python Data Source (sources/warehouse_ds.py), whose read lists live
 batch dirs at EXECUTION time: appends are visible to the NEXT query,
-no re-registration — with the same crash consistency (absorbed
-leftovers filtered) and migration resolution (evolved nulls, widened
-types, renamed columns) as read_table.
+no re-registration — with the same read set (the committed batch
+manifest) and migration resolution (evolved nulls, widened types,
+renamed columns) as read_table.
 """
 
 from __future__ import annotations
@@ -99,6 +99,25 @@ def test_view_ignores_vacuum_crash_leftovers(spark, warehouse):
     )  # base + 2 leftovers on disk
     n = spark.sql("SELECT COUNT(*) AS n FROM cleaning_records").collect()[0]["n"]
     assert n == 2  # exact, not 4
+
+
+def test_view_reads_the_same_files_as_read_table(spark, warehouse):
+    """The view's read set is read_table's: the manifest's live
+    batches. A part file planted at the table root holds rows, but no
+    manifest names it, so neither surface counts them."""
+    _append(spark, warehouse, [_rec(1), _rec(2)])
+    table_dir = sinks.table_path(warehouse, "cleaning_records")
+    src = os.path.join(warehouse, "planted")
+    spark.createDataFrame(
+        [_rec(3), _rec(4), _rec(5)], schemas.CLEANING_RECORDS
+    ).coalesce(1).write.parquet(src)
+    for f in os.listdir(src):
+        if f.endswith(".parquet"):
+            shutil.move(os.path.join(src, f), os.path.join(table_dir, f))
+    sinks.register_warehouse_views(spark, warehouse)
+    n = spark.sql("SELECT COUNT(*) AS n FROM cleaning_records").collect()[0]["n"]
+    assert n == sinks.read_table(spark, warehouse, "cleaning_records").count()
+    assert n == 2
 
 
 def test_view_filter_pushdown_correct(spark, warehouse):
